@@ -23,7 +23,7 @@ import datetime as _dt
 import random
 
 # Zipf-skewed domain pool: first domains get most urls AND bigger pages —
-# exercises the salted-skew repartition path (SURVEY.md §4.2.1).
+# the skew the url-hash buckets must absorb (SURVEY.md §4.2.1).
 DOMAINS = [
     "archive.example.org", "books.example.net", "maktaba.example.com",
     "turath.example.org", "library.example.edu", "nusus.example.net",

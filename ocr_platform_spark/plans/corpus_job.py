@@ -11,7 +11,7 @@ the north rule fixes (url, warc_ts, html, text, lang):
                            BEFORE the kernel: rows are dropped while they
                            are still one url string, never after paying
                            Python extraction for them)
-      → extraction kernel (extract_pages: salted url-hash repartition →
+      → extraction kernel (extract_pages: url-hash repartition on bucket →
                            mapInPandas, the flagship job's exact shape)
       → failure routing   (failed_stage rows split off, never dropped)
       → language gate     (detect_language over EXTRACTED text;
@@ -196,7 +196,7 @@ def _derived(spark: SparkSession, crawl: DataFrame) -> DataFrame:
     The persist stands in for the materialized `extracted` table a
     100 TB run writes (run_extraction_job) before curation reads it
     back."""
-    ext = (extract_pages(url_gate(crawl), n_buckets=16, salt=2)
+    ext = (extract_pages(url_gate(crawl), n_buckets=16)
            .select("url", "lang",
                    F.col("extracted_text").alias("text"), "failed_stage"))
     return (derive_curation_cols(ext)

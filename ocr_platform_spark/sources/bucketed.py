@@ -5,7 +5,7 @@ module is that layout made concrete, and tests/test_bucketing.py pins the
 plan: a join of two co-bucketed tables runs with ZERO Exchange nodes.
 
 Why it matters at 10^12 docs: the extraction job already partitions by
-salted url-hash (plans/extract_job.py) — writing its output bucketed BY
+url-hash bucket (plans/extract_job.py) — writing its output bucketed BY
 THE SAME KEY means every downstream url-keyed operation (recrawl delta's
 epoch join, the frontier anti-join, dedup's keep-first, incremental
 top-ups) reads pre-shuffled data. The shuffle that dominates a

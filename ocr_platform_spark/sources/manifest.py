@@ -53,7 +53,7 @@ def build_manifest(extracted: DataFrame, run_id: str) -> DataFrame:
             F.sum("blocks_dropped").alias("blocks_dropped"),
             F.sum("total_words").alias("total_words"),
             # extraction compute cost per bucket (ms) — max/mean across
-            # buckets quantifies residual skew after salting
+            # buckets quantifies the skew across buckets
             F.round(F.coalesce(F.sum("cost_ms"), F.lit(0.0)), 2)
             .alias("cost_ms"),
         )
@@ -65,7 +65,7 @@ def build_manifest(extracted: DataFrame, run_id: str) -> DataFrame:
 def write_with_manifest(extracted: DataFrame, output_path: str,
                         run_id: str,
                         processed_buckets: DataFrame | None = None,
-                        table: str | None = None) -> None:
+                        table: str | None = None) -> DataFrame:
     """Write extraction output partitioned by bucket + append manifest rows.
 
     Two sinks behind one seam (SURVEY §7):
@@ -85,6 +85,10 @@ def write_with_manifest(extracted: DataFrame, output_path: str,
     the buckets THIS run touched — buckets written by earlier runs keep
     their original manifest rows. Without it, every bucket on disk is
     (re-)manifested under this run_id.
+
+    Returns the whole output as read back after the write (every bucket,
+    not just this run's), so a caller lists the output and infers its
+    schema once per run.
     """
     spark = extracted.sparkSession
     if table is not None:
@@ -102,14 +106,16 @@ def write_with_manifest(extracted: DataFrame, output_path: str,
         # manifest derives from what is now durably on disk (not from the
         # pre-write plan — a lost task would otherwise go unnoticed)
         done = spark.read.parquet(output_path)
+    scope = done
     if processed_buckets is not None:
-        done = done.join(F.broadcast(processed_buckets.select("bucket")
-                                     .distinct()), "bucket", "left_semi")
-    manifest = build_manifest(done, run_id)
+        scope = done.join(F.broadcast(processed_buckets.select("bucket")
+                                      .distinct()), "bucket", "left_semi")
+    manifest = build_manifest(scope, run_id)
     if table is not None:
         manifest.writeTo(table + "_manifest").append()
     else:
         manifest.write.mode("append").parquet(manifest_path(output_path))
+    return done
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:

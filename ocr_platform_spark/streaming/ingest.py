@@ -12,7 +12,7 @@ Why this shape at 10^12-doc scale:
 - ``readStream`` file source lists only NEW files per micro-batch
   (``maxFilesPerTrigger`` bounds batch size → bounded executor memory);
 - the extraction kernel is literally ``extract_pages`` — same bucketing,
-  same salt, same Arrow batches, so streamed output is byte-identical to a
+  same bucket-keyed exchange, same Arrow batches, so streamed output is byte-identical to a
   batch run over the same files (asserted in tests/test_streaming.py);
 - the checkpoint (WAL + file-source log) gives exactly-once file
   processing across restarts — the streaming analogue of the batch

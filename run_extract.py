@@ -22,9 +22,9 @@ Sandbox usage (local mode, synthesizes input when --gen N is given):
 
     python run_extract.py --gen 10000 --output /tmp/extracted
 
-The job: read pages(url, warc_ts, html, text, lang) → salted url-hash
-repartition → mapInPandas(extract) → parquet/Iceberg partitioned by bucket
-+ per-partition lineage manifest. Re-running after a failure processes only
+The job: read pages(url, warc_ts, html, text, lang) → url-hash
+repartition on bucket → mapInPandas(extract) → parquet/Iceberg partitioned
+by bucket + per-partition lineage manifest. Re-running after a failure processes only
 buckets absent from the manifest (exact resume-from-checkpoint).
 """
 
@@ -45,8 +45,6 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="extracted table path")
     ap.add_argument("--buckets", type=int, default=None,
                     help="url-hash bucket count (default: extract_job's)")
-    ap.add_argument("--salt", type=int, default=None,
-                    help="per-bucket salt fan-out for skew-heavy domains")
     ap.add_argument("--no-resume", action="store_true",
                     help="reprocess every bucket even if manifested")
     ap.add_argument("--run-id", default=None)
@@ -67,8 +65,6 @@ def main() -> None:
     kwargs = {}
     if args.buckets is not None:
         kwargs["n_buckets"] = args.buckets
-    if args.salt is not None:
-        kwargs["salt"] = args.salt
     out = extract_job.run_extraction_job(
         spark, pages, args.output, resume=not args.no_resume,
         run_id=args.run_id, **kwargs)

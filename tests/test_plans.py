@@ -123,8 +123,8 @@ def test_catalog_page_broadcasts_all_dims(spark):
 
 
 def test_extract_job_shuffles_exactly_once(spark):
-    """The extraction plan has exactly ONE Exchange: the explicit salted
-    url-hash repartition. Anything more means an accidental extra shuffle
+    """The extraction plan has exactly ONE Exchange: the explicit url-hash
+    repartition on bucket. Anything more means an accidental extra shuffle
     of the multi-KiB html blobs."""
     from ocr_platform_spark.plans.extract_job import extract_pages
     from ocr_platform_spark.sources.pages import pages_df
@@ -133,6 +133,21 @@ def test_extract_job_shuffles_exactly_once(spark):
     p = plan_of(ext)
     assert p.count("Exchange") == 1, p
     assert "ArrowEvalPython" in p or "MapInPandas" in p
+
+
+def test_extract_exchange_keys_on_bucket_alone(spark):
+    """The default exchange hash-partitions on the bucket column alone into
+    n_buckets partitions, so each bucket lands in one task and file. A
+    sub-key such as a salt multiplies the per-task and per-file fixed
+    cost and balances nothing, because buckets already hash the url."""
+    import re
+
+    from ocr_platform_spark.plans.extract_job import extract_pages
+    from ocr_platform_spark.sources.pages import pages_df
+
+    p = plan_of(extract_pages(pages_df(spark, 200), n_buckets=8))
+    assert re.search(r"hashpartitioning\(bucket#\d+, 8\)", p), p
+    assert "salt" not in p, p
 
 
 def test_extract_repartition_not_coalesced_by_aqe(spark):

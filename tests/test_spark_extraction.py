@@ -175,6 +175,17 @@ def test_salt_balances_partition_cost(spark):
     assert imbalance(4) < imbalance(1)
 
 
+def test_one_parquet_file_per_bucket(spark, tmp_path):
+    """The exchange is keyed on bucket alone, so each bucket is written by
+    exactly one task: one parquet file per ``bucket=`` directory."""
+    out = tmp_path / "layout"
+    run_extraction_job(spark, pages_df(spark, 100), str(out), n_buckets=8)
+    dirs = sorted(out.glob("bucket=*"))
+    assert len(dirs) == 8
+    for d in dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d
+
+
 def test_manifest_cost_column(spark, tmp_path):
     """Manifest carries per-bucket extraction cost for skew monitoring."""
     out = str(tmp_path / "ext3")

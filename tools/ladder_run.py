@@ -2,7 +2,7 @@
 → 10M docs).
 
 Runs the COMPLETE extraction job — synthesize (pure function of (seed,
-index), zero input staging) → salted (bucket, salt) repartition →
+index), zero input staging) → url-hash repartition on bucket →
 extraction kernel → bucket-partitioned parquet write → per-bucket
 manifests — at a target doc count, in WAVES: each invocation processes up
 to ``--wave-buckets`` still-pending buckets in a FRESH JVM and exits, so
@@ -14,7 +14,7 @@ codec once a corpus passes ~10 GiB.
 
 Usage:
     python tools/ladder_run.py DOCS OUT_DIR [--wave-buckets N]
-                               [--buckets N] [--salt N] [--verify-only]
+                               [--buckets N] [--verify-only]
 
 Loop the command until it prints LADDER DONE (each run = one wave), then
 the final invocation verifies: row count == DOCS, manifest sum(docs_in)
@@ -40,7 +40,6 @@ def main() -> int:
     out_dir = pos[1]
     wave_buckets = int(kv.get("wave-buckets", 16))
     n_buckets = int(kv.get("buckets", 64))
-    salt = int(kv.get("salt", 4))
 
     from ocr_platform_spark.plans.extract_job import run_extraction_job
     from ocr_platform_spark.session import build_spark
@@ -54,7 +53,7 @@ def main() -> int:
     if "--verify-only" not in flags:
         run_extraction_job(
             spark, pages_df(spark, n_docs), out_dir,
-            n_buckets=n_buckets, salt=salt, max_buckets=wave_buckets)
+            n_buckets=n_buckets, max_buckets=wave_buckets)
     wave_sec = round(time.time() - t0, 1)
 
     from pyspark.sql import functions as F
